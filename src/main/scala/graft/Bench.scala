@@ -13,8 +13,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The JSON line is printed to stdout AND written verbatim (sole content)
   * to SPARK_GRAFT_BENCH_OUT (default /tmp/graft_bench.json) so a harness
-  * that can't pick the line out of sbt's [info]-prefixed stdout can read
-  * the file instead.
+  * that does not capture stdout can read the file instead.
   */
 object Bench {
 
@@ -22,6 +21,27 @@ object Bench {
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       sfDir: String): Unit =
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+
+  /** The two stdout lines: the full record with the per-query map, then a
+    * short summary (same fields minus the map, plus `n` and `failed`).
+    * Failed queries (-1) stay in the map and are left out of the total.
+    * Jackson writes both lines, so any `sf` path (quotes, backslashes)
+    * still gives valid JSON.
+    */
+  private[graft] def jsonLines(results: Seq[(String, Double)],
+      sfDir: String): (String, String) = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val total = results.map(_._2).filter(_ >= 0).sum
+    def head() = mapper.createObjectNode()
+      .put("metric", "total").put("value", total).put("unit", "sec")
+    val full = head()
+    val qs = full.putObject("queries")
+    results.foreach { case (k, v) => qs.put(k, v) }
+    full.put("sf", sfDir)
+    val short = head().put("n", results.size)
+      .put("failed", results.count(_._2 < 0)).put("sf", sfDir)
+    (mapper.writeValueAsString(full), mapper.writeValueAsString(short))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -114,11 +134,7 @@ object Bench {
         name -> (if (retimed > 0) math.min(best, retimed) else best)
       } else name -> best
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val (json, summary) = jsonLines(results.toSeq, sfDir)
     spark.stop() // stop first: its shutdown logging can't interleave with the line
     // print FIRST: the stdout line is the primary contract — a file-write
     // failure must not take it down too
@@ -129,7 +145,7 @@ object Bench {
     // does not). So a SECOND, short summary line — same fields minus the
     // map — is printed LAST, fitting any tail window. The full line and
     // the file dumps are unchanged; old consumers keep working.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":${results.values.count(_ < 0)},"sf":"$sfDir"}""")
+    println(summary)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => Console.err.println(s"[bench] write $outPath failed: $e") }

@@ -1571,7 +1571,7 @@ object SparkEntry {
     // for exactly one logical instant t = insert_ms + Δ, so the feed is a
     // deterministic per-row expansion — +1 at t, −1 at t + 1 — and gates
     // against a plain SQL oracle; the streaming form is spec-asserted
-    // event-for-event on both state engines.
+    // event-for-event.
     "changefeed_deltas" -> { (s, d) =>
       val ev = t(s, d, "events")
       DelayedJoin.changefeed(

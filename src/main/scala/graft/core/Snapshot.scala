@@ -1183,6 +1183,7 @@ object Snapshot {
       val prevFiles = prevMan.map(_.file).toSet
       val curMan = manifest(spark, path, Some(v))
       val curFiles = curMan.map(_.file)
+      val curFileSet = curFiles.toSet
       val added = curFiles.filterNot(prevFiles)
       val removed = (prevFiles -- curFiles).toSeq
       val schema = schemaAt(spark, path, v)
@@ -1235,8 +1236,8 @@ object Snapshot {
           val keyTot0 = byRow.where(col(key).isNotNull).groupBy(col(key))
             .agg(sum("__gcdf_co").as("__gcdf_to"), sum("__gcdf_cn").as("__gcdf_tn"))
           val stepRows =
-            prevMan.iterator.filter(s => removed.contains(s.file)).map(_.rows).sum +
-              curMan.iterator.filter(s => added.contains(s.file)).map(_.rows).sum
+            prevMan.iterator.filterNot(s => curFileSet(s.file)).map(_.rows).sum +
+              curMan.iterator.filterNot(s => prevFiles(s.file)).map(_.rows).sum
           val keyTot =
             if (stepRows <= CdfBroadcastKeyRowBound) broadcast(keyTot0) else keyTot0
           val shared = col(key).isNotNull &&
@@ -1272,7 +1273,7 @@ object Snapshot {
         else dvOf(spark, path, v - 1)
       val dvCur = dvOf(spark, path, v)
       val newlyMasked = dvCur.iterator
-        .filter { case (f, _) => prevFiles(f) && curFiles.contains(f) }
+        .filter { case (f, _) => prevFiles(f) && curFileSet(f) }
         .map { case (f, ords) =>
           f -> (ords.toSet -- dvPrev.getOrElse(f, Array.empty[Long])).toSeq
         }.filter(_._2.nonEmpty).toSeq

@@ -52,8 +52,7 @@ object QualityModel {
     graft.functions.native.qualityModelScore(text, m)
 
   /** Hashed token counts of one document: sorted `(featureIdx, count)`
-    * pairs + the token count. ONE implementation of tokenize+hash, shared
-    * by [[train]], [[gradContribs]] (and so [[trainDistributed]]).
+    * pairs + the token count, for [[gradContribs]].
     */
   private[graft] def hashedCounts(text: String,
                                   dim: Int): (Array[(Int, Double)], Long) = {
@@ -98,62 +97,20 @@ object QualityModel {
     out
   }
 
-  /** Train by logistic SGD on a DETERMINISTIC bounded sample: rows are
-    * drawn by their [[Corpus.hashUnit]] order (id-keyed, partition
-    * invariant), capped at `sampleCap`. Fixed iteration order makes the
-    * learned weights reproducible bit for bit. Labels must be 0/1.
-    *
-    * This is the small-sample REFERENCE trainer: it collects up to
-    * `sampleCap` document texts to the driver, so the cap is load-bearing
-    * driver memory. [[trainDistributed]] is the scale path — same
-    * deterministic sample contract, no text ever leaves the executors.
-    */
-  def train(df: DataFrame, textCol: String = "text",
-            labelCol: String = "label", idCol: String = "doc_id",
-            dim: Int = 1 << 12, epochs: Int = 5, lr: Double = 0.5,
-            sampleCap: Int = 100000): Model = {
-    val rows = df
-      .select(col(idCol), col(textCol).cast("string"),
-        col(labelCol).cast("double"))
-      .orderBy(Corpus.hashUnit(col(idCol), 42L), col(idCol))
-      .limit(sampleCap)
-      .collect()
-      .map(r => (r.getString(1), r.getDouble(2)))
-    // hashed normalized counts per doc, computed once
-    val feats = rows.map { case (text, y) =>
-      val (x, n) = hashedCounts(text, dim)
-      if (n > 0L) {
-        var j = 0; while (j < x.length) { x(j) = (x(j)._1, x(j)._2 / n); j += 1 }
-      }
-      (x, y)
-    }
-    val w = new Array[Double](dim)
-    var b = 0.0
-    var e = 0
-    while (e < epochs) {
-      feats.foreach { case (x, y) =>
-        var raw = b
-        x.foreach { case (i, v) => raw += w(i) * v }
-        val g = 1.0 / (1.0 + math.exp(-raw)) - y
-        x.foreach { case (i, v) => w(i) -= lr * g * v }
-        b -= lr * g
-      }
-      e += 1
-    }
-    Model(w, b)
-  }
-
-  /** DISTRIBUTED full-batch logistic training — the trainer whose driver
-    * memory is bounded by the MODEL, not the sample: each epoch is one
-    * Spark job (per-doc gradient contributions from the QualityGrad native
-    * expression under the current broadcast weights → keyed SUM, map-side
-    * combined) and the only collect is the aggregated gradient, at most
-    * dim+1 `(idx, micros)` rows — document text NEVER leaves the executors
+  /** Train by DISTRIBUTED full-batch logistic regression on a
+    * DETERMINISTIC bounded sample: rows are drawn by their
+    * [[Corpus.hashUnit]] order (id-keyed, partition invariant), capped at
+    * `sampleCap`. Labels must be 0/1. Driver memory is bounded by the
+    * MODEL, not the sample: each epoch is one Spark job (per-doc gradient
+    * contributions from the QualityGrad native expression under the
+    * current broadcast weights → keyed SUM, map-side combined) and the
+    * only collect is the aggregated gradient, at most dim+1
+    * `(idx, micros)` rows — document text NEVER leaves the executors
     * (spec-asserted via the executed plans' output schemas). Contributions
     * are micro-unit longs, so the epoch gradient — and every learned
-    * weight — is bit-identical under any partitioning. Same deterministic
-    * `sampleCap` draw as [[train]]; the sample is cached across epochs in
-    * executor memory.
+    * weight — is bit-identical under any partitioning. The sample is
+    * cached across epochs in executor memory; empty input yields the zero
+    * model.
     */
   def trainDistributed(df: DataFrame, textCol: String = "text",
                        labelCol: String = "label", idCol: String = "doc_id",

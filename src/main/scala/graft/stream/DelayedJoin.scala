@@ -55,26 +55,29 @@ object DelayedJoin {
   final case class Config(
       deltaMs: Long = DefaultDeltaMs,
       lastRewardWins: Boolean = false, // J6 exercise variant
-      honorOverrides: Boolean = false, // J7 exercise variant
-      useTransformWithState: Boolean = false) // Spark 4 state-v2 engine
+      honorOverrides: Boolean = false) // J7 exercise variant
 
-  /** The pure per-key state transition shared by BOTH streaming engines
-    * (flatMapGroupsWithState here, transformWithState in [[DelayedJoinTws]]
-    * — one function, so the two paths cannot drift semantically).
-    *
-    * Folds `incoming` into `prev` at event-time watermark `wm` and returns
+  /** The pure per-key state transition behind [[joined]]. Folds
+    * `incoming` into `prev` at event-time watermark `wm` and returns
     * (emitted rows, next state — None means the key's state is empty and can
     * be removed, next wake-up timestamp). Decisions with deadline
     * (insert_ms + Δ) ≤ wm are emitted and dropped; the wake-up is the
     * earliest pending deadline (or wm + Δ for reward-only/override state,
     * which needs one more visit to GC), clamped above the watermark.
+    *
+    * NULL keys follow [[batch]] and [[withoutOverridden]], where an
+    * equi-join never matches NULL: `groupByKey` still gathers every
+    * null-key event into one group, so a null-key reward is dropped here
+    * (it never matches, never buffers) and a null-key override never
+    * suppresses. A null-key decision emits its reward-0.0 row.
     */
   private[stream] def advance(cfg: Config, prev: State, incoming: List[In],
       wm: Long): (List[JoinedDecision], Option[State], Long) = {
     val overridden = prev.overridden ||
-      (cfg.honorOverrides && incoming.exists(_.kind == 2))
+      (cfg.honorOverrides && incoming.exists(e => e.kind == 2 && e.key != null))
     val decisions = prev.decisions ++ incoming.filter(_.kind == 0)
-    val rewards = prev.rewards ++ incoming.filter(_.kind == 1)
+    val rewards = prev.rewards ++
+      incoming.filter(e => e.kind == 1 && e.key != null)
 
     val (due, pending) = decisions.partition(_.insert_ms + cfg.deltaMs <= wm)
     val out: List[JoinedDecision] =
@@ -131,22 +134,14 @@ object DelayedJoin {
   /** Streaming delayed join over a pre-unioned input stream carrying an
     * event-time column `ts` (TimestampType, = insert_ms). Callers build the
     * union with [[unionStreams]].
-    *
-    * `cfg.useTransformWithState = true` routes the SAME state machine
-    * through Spark 4's state-v2 `transformWithState` engine (requires the
-    * RocksDB state-store provider) — see [[DelayedJoinTws]]. The default
-    * stays `flatMapGroupsWithState`: the two engines write incompatible
-    * checkpoint state, so existing checkpoints keep working.
     */
   def joined(spark: SparkSession, input: Dataset[In], cfg: Config = Config())
       : Dataset[JoinedDecision] = {
     import spark.implicits._
-    val withEventTime = input
+    input
       .withColumn("ts", timestamp_millis(col("insert_ms")))
       .as[In]
       .withWatermark("ts", s"${cfg.deltaMs} milliseconds")
-    if (cfg.useTransformWithState) DelayedJoinTws.joined(withEventTime, cfg)
-    else withEventTime
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         step(cfg))
@@ -173,7 +168,7 @@ object DelayedJoin {
     * decision leaves its window. Both deltas are fully determined at
     * emission time, so the changefeed is a STATELESS per-row expansion of
     * the joined stream (legal after flatMapGroupsWithState in append
-    * mode), and replays identically on both state engines.
+    * mode).
     */
   def changefeed(joined: Dataset[_],
                  deltaMs: Long = DefaultDeltaMs): DataFrame = {

@@ -59,12 +59,9 @@ object StreamDedupNear {
   final case class Match(id: Long, ts: java.sql.Timestamp, band: Int,
                          keep_id: Long, est: Double)
 
-  /** The pure per-bucket transition shared by BOTH streaming engines
-    * (flatMapGroupsWithState here, transformWithState in
-    * [[StreamDedupNearTws]] — one function, so the two paths cannot drift
-    * semantically): fold `incoming` into the bucket's owner state,
-    * earliest (ts, id) claiming a fresh bucket, later docs
-    * estimate-matched against the owner signature.
+  /** The pure per-bucket transition behind [[matches]]: fold `incoming`
+    * into the bucket's owner state, earliest (ts, id) claiming a fresh
+    * bucket, later docs estimate-matched against the owner signature.
     */
   private[stream] def fold(cfg: Config, prev: Option[Owner],
       incoming: List[Keyed]): (List[Match], Option[Owner]) = {
@@ -104,15 +101,15 @@ object StreamDedupNear {
     out.iterator
   }
 
-  private[stream] def horizonMsOf(watermark: String): Long = {
+  private def horizonMsOf(watermark: String): Long = {
     val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
       org.apache.spark.unsafe.types.UTF8String.fromString(watermark))
     require(iv.months == 0, s"calendar-month horizons are ambiguous: $watermark")
     iv.days * 86400000L + iv.microseconds / 1000L
   }
 
-  /** The watermarked, banded [[Keyed]] stream both engines consume. */
-  private[stream] def keyedStream(docs: DataFrame, textCol: String,
+  /** The watermarked, banded [[Keyed]] stream [[matches]] groups. */
+  private def keyedStream(docs: DataFrame, textCol: String,
       idCol: String, tsCol: String, watermark: String,
       cfg: Config): Dataset[Keyed] = {
     val spark = docs.sparkSession
@@ -150,30 +147,20 @@ object StreamDedupNear {
     * input must carry `idCol` (long), `textCol`, and event-time `tsCol`;
     * `watermark` doubles as the dedup horizon (how long a bucket owner is
     * retained — the [[StreamDedup]] contract).
-    * `useTransformWithState = true` routes the SAME transition through
-    * Spark 4's state-v2 engine ([[StreamDedupNearTws]] — requires the
-    * RocksDB state store provider; checkpoints are not interchangeable
-    * between the engines).
     */
   def matches(docs: DataFrame, textCol: String = "text",
               idCol: String = "doc_id", tsCol: String = "ts",
               watermark: String = "10 minutes",
-              cfg: Config = Config(),
-              useTransformWithState: Boolean = false): Dataset[Match] = {
-    val horizonMs = horizonMsOf(watermark)
-    val keyed = keyedStream(docs, textCol, idCol, tsCol, watermark, cfg)
-    if (useTransformWithState)
-      StreamDedupNearTws.matches(keyed, cfg, horizonMs)
-    else
-      keyed.groupByKey(k => (k.band, k.bucket))(
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaInt,
-            org.apache.spark.sql.Encoders.scalaLong))
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(step(cfg, horizonMs))(
-          org.apache.spark.sql.Encoders.product[Owner],
-          org.apache.spark.sql.Encoders.product[Match])
-  }
+              cfg: Config = Config()): Dataset[Match] =
+    keyedStream(docs, textCol, idCol, tsCol, watermark, cfg)
+      .groupByKey(k => (k.band, k.bucket))(
+        org.apache.spark.sql.Encoders.tuple(
+          org.apache.spark.sql.Encoders.scalaInt,
+          org.apache.spark.sql.Encoders.scalaLong))
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout)(step(cfg, horizonMsOf(watermark)))(
+        org.apache.spark.sql.Encoders.product[Owner],
+        org.apache.spark.sql.Encoders.product[Match])
 
   /** Fold a micro-batch of [[Match]] rows into per-document verdicts:
     * `(doc_id, keep_id, n_bands)` with `keep_id` = minimum matched owner

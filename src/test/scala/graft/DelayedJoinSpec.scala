@@ -37,11 +37,18 @@ class DelayedJoinSpec extends SparkSpec {
       // one more empty-ish batch so timeouts set in the previous batch fire
       input.addData(In.apply(graft.core.Reward("_wm", 0.0, T0 + 31 * Delta)))
       q.processAllAvailable()
-      spark.table(name)
-        .select("key", "reward", "reward_delta_ms")
-        .as[(String, Double, Option[Long])].collect().toSeq.sorted
+      sortedRows(spark.table(name))
     } finally q.stop()
   }
+
+  /** (key, reward, reward_delta_ms) rows in a fixed order; a NULL key
+    * sorts first.
+    */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame)
+      : Seq[(String, Double, Option[Long])] =
+    df.select("key", "reward", "reward_delta_ms")
+      .as[(String, Double, Option[Long])].collect().toSeq
+      .sortBy(t => (Option(t._1), t._2, t._3))
 
   private def d(key: String, ms: Long) =
     In(graft.core.Decision(key, "ctx", "act", 0.5, ms))
@@ -171,56 +178,56 @@ class DelayedJoinSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("CDC changefeed: (timestamp, diff) delta stream, event-for-event on both engines") {
+  test("CDC changefeed: (timestamp, diff) delta stream, event-for-event") {
     // Materialize-TAIL parity (reference join-service/app/main.py:114-120):
     // every joined row yields +1 at its logical instant t = insert_ms + Δ
     // (the only timestamp satisfying both the window and the join filter)
-    // and −1 one tick later, when the decision exits its window. The
-    // timestamps derive from the view algebra, so the delta stream must be
-    // IDENTICAL on both state engines.
+    // and −1 one tick later, when the decision exits its window.
     implicit val sqlCtx = spark.sqlContext
-    def runCdc(engine: String, tws: Boolean): Seq[(Long, Int, String, Double)] = {
-      val conf = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(conf)
-      if (tws) spark.conf.set(conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val input = MemoryStream[In]
-      val q = DelayedJoin.changefeed(
-          DelayedJoin.joined(spark, input.toDS(),
-            Config(deltaMs = Delta, useTransformWithState = tws)), Delta)
-        .writeStream.format("memory").queryName(engine).outputMode("append").start()
-      try {
-        input.addData(
-          d("k1", T0), r("k1", T0 + 3000, 5.0), // matched
-          d("k2", T0 + 500),                    // miss -> reward 0.0
-          d("k3", T0), r("k3", T0 + 1000, 1.0), r("k3", T0 + 2000, 2.0)) // fan-out
-        q.processAllAvailable()
-        input.addData(r("_wm", T0 + 30 * Delta, 0.0))
-        q.processAllAvailable()
-        input.addData(r("_wm", T0 + 31 * Delta, 0.0))
-        q.processAllAvailable()
-        spark.table(engine).select("timestamp", "diff", "key", "reward")
-          .as[(Long, Int, String, Double)].collect().toSeq.sorted
-      } finally {
-        q.stop()
-        prev match {
-          case Some(v) => spark.conf.set(conf, v)
-          case None => spark.conf.unset(conf)
-        }
-      }
-    }
-    val fmgws = runCdc("cdc_fmgws", tws = false)
+    val input = MemoryStream[In]
+    val q = DelayedJoin.changefeed(
+        DelayedJoin.joined(spark, input.toDS(), Config(deltaMs = Delta)), Delta)
+      .writeStream.format("memory").queryName("dj_cdc").outputMode("append").start()
+    val events = try {
+      input.addData(
+        d("k1", T0), r("k1", T0 + 3000, 5.0), // matched
+        d("k2", T0 + 500),                    // miss -> reward 0.0
+        d("k3", T0), r("k3", T0 + 1000, 1.0), r("k3", T0 + 2000, 2.0)) // fan-out
+      q.processAllAvailable()
+      input.addData(r("_wm", T0 + 30 * Delta, 0.0))
+      q.processAllAvailable()
+      input.addData(r("_wm", T0 + 31 * Delta, 0.0))
+      q.processAllAvailable()
+      spark.table("dj_cdc").select("timestamp", "diff", "key", "reward")
+        .as[(Long, Int, String, Double)].collect().toSeq.sorted
+    } finally q.stop()
     // the consumer's view: inserts only, the reference's diff > 0 filter
-    assert(fmgws.filter(_._2 > 0).map(e => (e._3, e._4)).sorted == Seq(
+    assert(events.filter(_._2 > 0).map(e => (e._3, e._4)).sorted == Seq(
       ("k1", 5.0), ("k2", 0.0), ("k3", 1.0), ("k3", 2.0)))
     // every insert at t = insert_ms + Δ has its retraction at t + 1
-    val inserts = fmgws.filter(_._2 > 0)
-    val retractions = fmgws.filter(_._2 < 0)
+    val inserts = events.filter(_._2 > 0)
+    val retractions = events.filter(_._2 < 0)
     assert(inserts.map(e => (e._1 + 1, -1, e._3, e._4)).sorted == retractions)
     assert(inserts.forall(e => e._1 == (if (e._3 == "k2") T0 + 500 else T0) + Delta))
-    // event-for-event parity across state engines
-    val tws = runCdc("cdc_tws", tws = true)
-    assert(tws == fmgws)
+  }
+
+  test("null keys: the stream agrees with the batch analogs (NULL never matches)") {
+    // groupByKey gathers every null-key event into one group, but the
+    // batch analogs are equi-joins, where NULL matches nothing: a null-key
+    // reward never joins and a null-key override never suppresses
+    val events = Seq(
+      d(null, T0), r(null, T0 + 1000, 5.0), In.overrideKey(null, T0 + 2000),
+      d("k1", T0), r("k1", T0 + 3000, 7.0))
+    val stream = run(Config(deltaMs = Delta, honorOverrides = true), events,
+      "dj_nullkey")
+    val evDf = events.toDF()
+    val batch = sortedRows(DelayedJoin.batch(
+      DelayedJoin.withoutOverridden(
+        evDf.where($"kind" === 0).select("key", "insert_ms"),
+        evDf.where($"kind" === 2)),
+      evDf.where($"kind" === 1).select("key", "reward", "insert_ms"), Delta))
+    assert(stream == batch)
+    assert(stream == Seq((null, 0.0, None), ("k1", 7.0, Some(3000L))))
   }
 
   test("state machine handles volume: 500 keys x 20 events, bounded state") {

@@ -1206,13 +1206,14 @@ class LlmSpec extends SparkSpec {
     val bad = (40 until 80).map(i =>
       (i.toLong, s"buy cheap pills now click here winner$i", 0.0))
     val df = (good ++ bad).toDF("doc_id", "text", "label")
-    val m = QualityModel.train(df, dim = 256, epochs = 20, lr = 1.0)
+    val m = QualityModel.trainDistributed(df, dim = 256, epochs = 40, lr = 2.0)
     // held-out docs from each vocabulary land on the right side
     val sGood = QualityModel.scoreText("careful insightful analysis of methods", m)
     val sBad = QualityModel.scoreText("click here buy cheap pills now", m)
     assert(sGood > 0.7 && sBad < 0.3, s"good=$sGood bad=$sBad")
     // deterministic: identical weights from a repartitioned input
-    val m2 = QualityModel.train(df.repartition(7), dim = 256, epochs = 20, lr = 1.0)
+    val m2 = QualityModel.trainDistributed(df.repartition(7), dim = 256,
+      epochs = 40, lr = 2.0)
     assert(m2.weights.toSeq == m.weights.toSeq && m2.bias == m.bias)
     // the artifact round-trips exactly
     val dir = tmpDir("qmodel") + "/m"
@@ -1341,7 +1342,7 @@ class LlmSpec extends SparkSpec {
     val m2 = QualityModel.trainDistributed(df.repartition(7), dim = 256,
       epochs = 40, lr = 2.0)
     assert(m2.weights.toSeq == m.weights.toSeq && m2.bias == m.bias)
-    // and empty input yields the zero model, like train
+    // and empty input yields the zero model
     val empty = Seq.empty[(Long, String, Double)].toDF("doc_id", "text", "label")
     val mE = QualityModel.trainDistributed(empty, dim = 16)
     assert(mE.weights.forall(_ == 0.0) && mE.bias == 0.0)
@@ -1555,7 +1556,7 @@ class LlmSpec extends SparkSpec {
     val m = NgramLm.train(empty, n = 2).as[(String, Int, Long)].collect()
     assert(m.toSeq == Seq(("", 0, 0L)))
     // classifier: zero updates → zero weights, bias 0 → every score 0.5
-    val qm = QualityModel.train(
+    val qm = QualityModel.trainDistributed(
       empty.withColumn("label", lit(1.0)), dim = 16, epochs = 2)
     assert(qm.weights.forall(_ == 0.0) && qm.bias == 0.0)
     assert(QualityModel.scoreText("anything at all", qm) == 0.5)

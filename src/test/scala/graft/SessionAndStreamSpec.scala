@@ -10,6 +10,22 @@ import org.scalacheck.rng.Seed
 class SessionAndStreamSpec extends SparkSpec {
   import spark.implicits._
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** State-v2 operators require the RocksDB provider; scope it to the
+    * queries a test starts and restore the session default after.
+    */
+  private def withRocksDb[A](body: => A): A = {
+    val prev = spark.conf.getOption(ProviderKey)
+    spark.conf.set(ProviderKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(ProviderKey, v)
+      case None => spark.conf.unset(ProviderKey)
+    }
+  }
+
   test("graft_* SQL functions are usable from spark.sql") {
     GraftSession.registerFunctions(spark)
     val r = spark.sql(
@@ -628,52 +644,6 @@ class SessionAndStreamSpec extends SparkSpec {
       val v3 = verdictMap()
       assert(v3.get(6L).contains(5L), s"new-owner copy missed: $v3")
     } finally q.stop()
-    // the SAME scenario through the state-v2 transformWithState engine
-    // (shared fold ⇒ identical semantics; RocksDB provider required)
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val inputT = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val qT = StreamDedupNear.matches(
-        inputT.toDF().toDF("doc_id", "ts", "text"), watermark = "1 minute",
-        useTransformWithState = true)
-      .toDF()
-      .writeStream.format("memory").queryName("neardup_tws")
-      .outputMode("append").start()
-    try {
-      inputT.addData(
-        (1L, ts("2024-01-01 00:00:00"), base),
-        (2L, ts("2024-01-01 00:00:05"), base),
-        (3L, ts("2024-01-01 00:00:10"), near),
-        (4L, ts("2024-01-01 00:00:15"), other))
-      qT.processAllAvailable()
-      val vT = graft.stream.StreamDedupNear.verdictsOf(
-          spark.table("neardup_tws"))
-        .select("doc_id", "keep_id").as[(Long, Long)].collect().toMap
-      assert(vT.get(2L).contains(1L) && vT.get(3L).contains(1L) &&
-        !vT.contains(1L) && !vT.contains(4L), s"tws: $vT")
-      // horizon GC through the native timer: owner expires, re-arrival
-      // is novel, its copy matches the NEW owner
-      inputT.addData((90L, ts("2024-01-01 00:05:00"), "tws closer one"))
-      qT.processAllAvailable()
-      inputT.addData((5L, ts("2024-01-01 00:10:00"), base))
-      qT.processAllAvailable()
-      inputT.addData((6L, ts("2024-01-01 00:10:10"), base))
-      qT.processAllAvailable()
-      val vT2 = graft.stream.StreamDedupNear.verdictsOf(
-          spark.table("neardup_tws"))
-        .select("doc_id", "keep_id").as[(Long, Long)].collect().toMap
-      assert(!vT2.contains(5L) && vT2.get(6L).contains(5L), s"tws GC: $vT2")
-    } finally {
-      qT.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
     // the foreachBatch verdict sink: per-batch parquet, idempotent layout
     val input2 = MemoryStream[(Long, java.sql.Timestamp, String)]
     val vDir = tmpDir("neardup_verdicts")
@@ -842,6 +812,36 @@ class SessionAndStreamSpec extends SparkSpec {
         case None =>
           spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
+    }
+  }
+
+  test("streaming heavy hitters: promotion at threshold, milestone cadence") {
+    import graft.stream.{HeavyHit, StreamHeavyHitters}
+    withRocksDb {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[String]
+      val q = StreamHeavyHitters.hits(input.toDS(), threshold = 3L, every = 2L)
+        .writeStream.format("memory").queryName("shh")
+        .outputMode("append").start()
+      try {
+        // batch 1: a×2, b×1 — nobody reaches the threshold
+        input.addData("a", "b", "a")
+        q.processAllAvailable()
+        assert(spark.table("shh").as[HeavyHit].collect().isEmpty)
+        // batch 2: a crosses 3 (promoted), then milestones at 5;
+        // b stays cold at 2
+        input.addData("a", "a", "a", "b")
+        q.processAllAvailable()
+        assert(spark.table("shh").as[HeavyHit].collect().toSet ==
+          Set(HeavyHit("a", 3L), HeavyHit("a", 5L)))
+        // batch 3: counter state persists across batches — a hits the
+        // 7-milestone with two more events; b finally promotes at 3
+        input.addData("a", "a", "b")
+        q.processAllAvailable()
+        assert(spark.table("shh").as[HeavyHit].collect().toSet ==
+          Set(HeavyHit("a", 3L), HeavyHit("a", 5L), HeavyHit("a", 7L),
+            HeavyHit("b", 3L)))
+      } finally q.stop()
     }
   }
 
