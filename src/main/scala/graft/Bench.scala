@@ -53,12 +53,10 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE stays ON by default — it is the 100 TB posture (skew splits,
-      // partition coalescing, stage reuse) even though its per-stage
-      // re-planning latency is a measurable share of the per-query floor at
-      // toy scale. SPARK_GRAFT_AQE=false exists to quantify that share.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE stays ON — it is the 100 TB posture (skew splits, partition
+      // coalescing, stage reuse) even though its per-stage re-planning
+      // latency is a measurable share of the per-query floor at toy scale.
+      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Steady-state methodology: an untimed warm-up pass runs every query

@@ -44,13 +44,6 @@ object Scratch {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.graft.cacheTables", "true")
-    // A/B hooks for AQE coalescing experiments (runtime confs, read per
-    // query): SPARK_GRAFT_COALESCE_PF sets ...parallelismFirst,
-    // SPARK_GRAFT_ADVISORY sets ...advisoryPartitionSizeInBytes.
-    sys.env.get("SPARK_GRAFT_COALESCE_PF").foreach(v => spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst", v))
-    sys.env.get("SPARK_GRAFT_ADVISORY").foreach(v => spark.conf.set(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
     graft.core.Tables.all.foreach(n => graft.core.Tables(spark, sfDir, n).count())
 
     var jobs = 0

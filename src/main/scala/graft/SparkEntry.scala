@@ -162,232 +162,182 @@ object SparkEntry {
       org.apache.spark.sql.graftbridge.SessionBridge.uuid(s).take(8)
   }
 
-  // IVF index memo keyed by (session UUID, data dir): the index is an
-  // offline artifact — built and materialized once, probed many times. The
-  // build includes the cluster-partitioned vector layout, so every probe
+  // A fixture built once per (session, data dir) under graft.core.SessionMemo's
+  // boundary. `kind` names both the memo entry and the scratch directory
+  // handed to `build`; fixtures that write nothing ignore the directory.
+  private def artifact[T](s: SparkSession, d: String, kind: String)(
+      build: String => T): T =
+    graft.core.SessionMemo(s, d, kind)(build(scratchDir(s, kind, d)))
+
+  // IVF index: an offline artifact — built and materialized once, probed
+  // many times. The build includes the cluster-partitioned vector layout, so every probe
   // prunes at the scan (reads nprobe partitions, never the corpus).
-  private val ivfIndexes =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Similarity.IvfIndex]
   private def ivfIdx(s: SparkSession, d: String): Similarity.IvfIndex =
-    ivfIndexes.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d),
-      Similarity.buildClusteredIvfIndex(t(s, d, "embeddings"),
-        kClusters = 16, path = scratchDir(s, "ivf", d)))
+    artifact(s, d, "ivf")(path => Similarity.buildClusteredIvfIndex(
+      t(s, d, "embeddings"), kClusters = 16, path = path))
 
   // PQ index memo: same offline-artifact treatment
-  private val pqIndexes =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Similarity.PqIndex]
   private def pqIdx(s: SparkSession, d: String): Similarity.PqIndex =
-    pqIndexes.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d),
+    artifact(s, d, "pq")(_ =>
       Similarity.buildPqIndex(t(s, d, "embeddings"), m = 8, kCodes = 16))
 
   // IVF-PQ composed index memo: codes co-partitioned by coarse cluster on
   // disk, so the probe prunes partitions AND never reads raw vectors.
-  private val ivfPqIndexes =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Similarity.IvfPqIndex]
   private def ivfPqIdx(s: SparkSession, d: String): Similarity.IvfPqIndex =
-    ivfPqIndexes.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d),
-      Similarity.buildIvfPqIndex(t(s, d, "embeddings"),
-        kClusters = 16, m = 8, kCodes = 16, path = scratchDir(s, "ivfpq", d)))
+    artifact(s, d, "ivfpq")(path => Similarity.buildIvfPqIndex(
+      t(s, d, "embeddings"), kClusters = 16, m = 8, kCodes = 16, path = path))
 
   // BM25 index memo: postings partitioned by term bucket — the
   // build-once/probe-many retrieval artifact (the probe partition-prunes
   // to the query terms' buckets instead of re-tokenizing the corpus).
-  private val bm25Indexes =
-    scala.collection.concurrent.TrieMap.empty[(String, String), graft.llm.Search.Bm25Index]
   private def bm25Idx(s: SparkSession, d: String): graft.llm.Search.Bm25Index =
-    bm25Indexes.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d),
-      graft.llm.Search.buildBm25Index(t(s, d, "documents"),
-        path = scratchDir(s, "bm25", d), nBuckets = 16))
+    artifact(s, d, "bm25")(path => graft.llm.Search.buildBm25Index(
+      t(s, d, "documents"), path = path, nBuckets = 16))
 
   // Unigram-LM seed-vocab memo: the tokenizer is a corpus artifact —
   // trained once per (session, dir), encoded with many times.
-  private val unigramVocabs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), graft.llm.Unigram.Vocab]
   private def unigramVocab(s: SparkSession, d: String): graft.llm.Unigram.Vocab =
-    unigramVocabs.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d),
+    artifact(s, d, "unigram")(_ =>
       graft.llm.Unigram.seed(t(s, d, "documents"), maxLen = 6, topK = 200))
 
   // The incrementally-maintained twin: history (doc_id % 3 != 0) built
   // once, the "new crawl" appended as postings/stats increments — probes
   // must be indistinguishable from a from-scratch rebuild.
-  private val bm25IncIndexes =
-    scala.collection.concurrent.TrieMap.empty[(String, String), graft.llm.Search.Bm25Index]
   private def bm25IncIdx(s: SparkSession, d: String): graft.llm.Search.Bm25Index =
-    bm25IncIndexes.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "bm25_inc") { path =>
       val idx = graft.llm.Search.buildBm25Index(
         t(s, d, "documents").where(col("doc_id") % 3 =!= 0),
-        path = scratchDir(s, "bm25_inc", d), nBuckets = 16)
+        path = path, nBuckets = 16)
       graft.llm.Search.appendToBm25Index(idx,
         t(s, d, "documents").where(col("doc_id") % 3 === 0), batchId = 1L)
-    })
+    }
 
-  // The incremental-dedup signature store is an offline artifact too:
-  // built once per (session, dir) from the even-id half of the corpus, then
-  // probed (read-only) by the gate query — matching how a pipeline builds
-  // the store from history and probes each new crawl against it.
   // CSV twin of the documents table, written once per (session, dir): the
   // scan_csv gate must recover the parquet-exact rows from the CSV bytes
   // (header, quoting, type re-application from the explicit schema).
-  private val csvDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def csvDir(s: SparkSession, d: String): String =
-    csvDirs.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "csvsrc", d)
+    artifact(s, d, "csvsrc") { path =>
       graft.etl.Sources.writeCsv(t(s, d, "documents"), path)
       path
-    })
+    }
 
   // ORC copy of documents written once per (session, dir) — the fourth
   // source format's round-trip gate input.
-  private val orcDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def orcDir(s: SparkSession, d: String): String =
-    orcDirs.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "orcsrc", d)
+    artifact(s, d, "orcsrc") { path =>
       graft.etl.Sources.writeOrc(t(s, d, "documents"), path)
       path
-    })
+    }
 
   // JSONL copy of documents written once per (session, dir) — the export
   // format's round-trip gate input.
-  private val jsonlDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def jsonlDir(s: SparkSession, d: String): String =
-    jsonlDirs.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "jsonlsrc", d)
+    artifact(s, d, "jsonlsrc") { path =>
       graft.etl.Sources.writeJsonl(t(s, d, "documents"), path)
       path
-    })
+    }
 
   // WARC archive written once per (session, dir): documents as byte-
   // counted response records (payloads embed a newline to prove the
   // framing is Content-Length, not lines); the gate re-parses it.
-  private val warcDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def warcDir(s: SparkSession, d: String): String =
-    warcDirs.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "warcsrc", d)
+    artifact(s, d, "warcsrc") { path =>
       graft.etl.Sources.writeWarc(t(s, d, "documents").select(col("doc_id"),
         concat(lit("http://w"), col("doc_id").cast("string"),
           lit(".example/x")).as("url"),
         concat(lit("L1\n"), col("text")).as("text")), path)
       path
-    })
+    }
 
   // The gz twin: the SAME archived relation as compressed-at-rest WARC
   // with application/http payloads (status line + headers + blank + body
   // inside Content-Length) — the Common Crawl shape. The reader must
   // inflate gzip members AND strip the HTTP header block to recover the
   // documents.
-  private val warcGzDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def warcGzDir(s: SparkSession, d: String): String =
-    warcGzDirs.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "warcgzsrc", d)
+    artifact(s, d, "warcgzsrc") { path =>
       graft.etl.Sources.writeWarcGz(
         t(s, d, "documents").select(col("doc_id"),
           concat(lit("http://w"), col("doc_id").cast("string"),
             lit(".example/x")).as("url"),
           concat(lit("L1\n"), col("text")).as("text")), path, http = true)
       path
-    })
+    }
 
   // Quantile register store built once per (session, dir) on the
   // even-orderkey history half; the incremental gate add-merges the odd
   // half READ-ONLY (count addition = the sketch's merge theorem).
-  private val quantileStores =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def quantileStore(s: SparkSession, d: String): String =
-    quantileStores.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "qsketch", d)
+    artifact(s, d, "qsketch") { path =>
       graft.analytics.Sketches.buildQuantileStore(s, path,
         t(s, d, "orders").where(col("o_orderkey") % 2 === 0),
         "o_orderpriority", col("o_totalprice"), 0.0, 524288.0, 512)
       path
-    })
+    }
 
   // HLL register store built once per (session, dir) on the even-event-id
   // history half; the incremental gate max-merges the odd half READ-ONLY.
-  private val hllStores =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def hllStore(s: SparkSession, d: String): String =
-    hllStores.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "hllstore", d)
+    artifact(s, d, "hllstore") { path =>
       graft.analytics.Sketches.buildHllStore(s, path,
         t(s, d, "events").where(col("event_id") % 2 === 0),
         "event_type", "user_id")
       path
-    })
+    }
 
   // CDC chunk-hash store built once per (session, dir) on the even-id
   // history half; the incremental gate probes it READ-ONLY with the odd
   // half (idempotent under bench reps — appendToStore is the spec-pinned
   // lifecycle write, not part of the gate).
-  private val cdcStores =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def cdcStore(s: SparkSession, d: String): String =
-    cdcStores.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "cdcstore", d)
+    artifact(s, d, "cdcstore") { path =>
       graft.llm.Cdc.buildStore(s, path,
         t(s, d, "documents").where(col("doc_id") % 2 === 0))
       path
-    })
+    }
 
   // Range-clustered lineitem snapshot with the file-level zone-map
   // manifest, built once per (session, dir); the scan gate probes it with
   // a fixed orderkey range and must return exactly the plain filtered
   // relation while reading only the overlapping files.
-  private val snapshots =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshot(s: SparkSession, d: String): String =
-    snapshots.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot", d)
+    artifact(s, d, "snapshot") { path =>
       graft.core.Snapshot.write(t(s, d, "lineitem"), path,
         "l_orderkey", nFiles = 16)
       path
-    })
+    }
 
   // Versioned snapshot for the INCREMENTAL gate: v1 = even orderkeys,
   // v2 = the odd-orderkey crawl appended (O(batch) — v1 files carry over
   // by manifest row, never rescanned). The gate probes v2.
-  private val snapshotsIncr =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshotIncr(s: SparkSession, d: String): String =
-    snapshotsIncr.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_incr", d)
+    artifact(s, d, "snapshot_incr") { path =>
       val li = t(s, d, "lineitem")
       graft.core.Snapshot.write(li.where(col("l_orderkey") % 2 === 0),
         path, "l_orderkey", nFiles = 8)
       graft.core.Snapshot.append(li.where(col("l_orderkey") % 2 === 1),
         path, "l_orderkey", nFiles = 8)
       path
-    })
+    }
 
   // Versioned snapshot for the DELETE gate: full lineitem, then a
   // copy-on-write range delete of orderkeys [300, 349] — only the
   // overlapping files rewrite; the gate probes the post-delete version.
-  private val snapshotsDel =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshotDel(s: SparkSession, d: String): String =
-    snapshotsDel.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_del", d)
+    artifact(s, d, "snapshot_del") { path =>
       graft.core.Snapshot.write(t(s, d, "lineitem"), path,
         "l_orderkey", nFiles = 16)
       graft.core.Snapshot.delete(s, path, "l_orderkey", 300L, 349L)
       path
-    })
+    }
 
   // Versioned snapshot for the SCHEMA-EVOLUTION gate: v1 = even docs
   // under the narrow schema, v2 = odd docs appended WITH a new trailing
   // column (append-only ADD COLUMN — the M1-M3 contract wired into the
   // table format). The gate scans the evolved head: old files must
   // null-fill the added column through the explicit schema.
-  private val snapshotsEvolve =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def docsSnapshotEvolve(s: SparkSession, d: String): String =
-    snapshotsEvolve.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_evolve", d)
+    artifact(s, d, "snapshot_evolve") { path =>
       val docs = t(s, d, "documents")
       graft.core.Snapshot.write(
         docs.where(col("doc_id") % 2 === 0)
@@ -399,17 +349,14 @@ object SparkEntry {
             (col("n_chars") % 100).as("quality")),
         path, "doc_id", nFiles = 4)
       path
-    })
+    }
 
   // Multi-column zone-map snapshot: part clustered on the Morton key of
   // (p_retailprice, p_size) with BOTH originals registered as secondary
   // stat columns — the z-order layout makes every registered dimension's
   // per-file bands nearly disjoint, so a probe on either prunes files.
-  private val snapshotsMulti =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def partSnapshotMulti(s: SparkSession, d: String): String =
-    snapshotsMulti.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_multi", d)
+    artifact(s, d, "snapshot_multi") { path =>
       graft.core.Snapshot.write(
         graft.etl.Etl.zOrderKey(
           t(s, d, "part").select("p_partkey", "p_retailprice", "p_size"),
@@ -417,18 +364,15 @@ object SparkEntry {
         path, "_z", nFiles = 16,
         statCols2 = Seq("p_size", "p_retailprice"))
       path
-    })
+    }
 
   // Snapshot whose INCREMENT arrives through the DSv2 WRITE path: the
   // odd-orderkey half lands via plain df.write.format("graft-snapshot")
   // .mode("append") — Spark plans the range clustering from the
   // connector's required distribution, the writers compute the zone-map
   // rows inline, and the driver commit is the same optimistic protocol.
-  private val snapshotsDsv2W =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshotDsv2W(s: SparkSession, d: String): String =
-    snapshotsDsv2W.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_dsv2w", d)
+    artifact(s, d, "snapshot_dsv2w") { path =>
       val li = t(s, d, "lineitem")
       graft.core.Snapshot.write(li.where(col("l_orderkey") % 2 === 0),
         path, "l_orderkey", nFiles = 8)
@@ -436,17 +380,14 @@ object SparkEntry {
         .write.format("graft-snapshot").mode("append")
         .option("nfiles", 8).save(path)
       path
-    })
+    }
 
   // Versioned snapshot for the MERGE gate: full lineitem, then one
   // key-replace upsert — orderkeys [300, 349] re-land with shifted
   // quantities AND ten brand-new orderkeys insert, in a single commit
   // that rewrites only the files actually holding a matched key.
-  private val snapshotsMerge =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshotMerge(s: SparkSession, d: String): String =
-    snapshotsMerge.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_merge", d)
+    artifact(s, d, "snapshot_merge") { path =>
       val li = t(s, d, "lineitem")
       graft.core.Snapshot.write(li, path, "l_orderkey", nFiles = 16)
       val updates = li.where(col("l_orderkey").between(300, 349))
@@ -456,32 +397,26 @@ object SparkEntry {
       graft.core.Snapshot.merge(updates.unionByName(inserts), path,
         "l_orderkey", nFiles = 4)
       path
-    })
+    }
 
   // Versioned snapshot for the DELETION-VECTOR gate: full lineitem, then
   // a merge-on-read delete of orderkeys [300, 349] — ZERO data files
   // rewrite (the commit is a per-file row-ordinal mask); every read
   // applies the mask via a broadcast _metadata.row_index anti-join.
-  private val snapshotsDv =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshotDv(s: SparkSession, d: String): String =
-    snapshotsDv.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_dv", d)
+    artifact(s, d, "snapshot_dv") { path =>
       graft.core.Snapshot.write(t(s, d, "lineitem"), path,
         "l_orderkey", nFiles = 16)
       graft.core.Snapshot.deleteVectors(s, path, "l_orderkey", 300L, 349L)
       path
-    })
+    }
 
   // Versioned snapshot for the TYPED-CDF gate: full lineitem, then a
   // copy-on-write delete (v2) and a merge (v3: shifted-quantity updates
   // + brand-new keys) — changesTyped(1, 3) must reconstruct the exact
   // insert/delete/update_preimage/update_postimage relation.
-  private val snapshotsCdf =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshotCdf(s: SparkSession, d: String): String =
-    snapshotsCdf.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_cdf", d)
+    artifact(s, d, "snapshot_cdf") { path =>
       val li = t(s, d, "lineitem")
       graft.core.Snapshot.write(li, path, "l_orderkey", nFiles = 16)
       graft.core.Snapshot.delete(s, path, "l_orderkey", 300L, 349L)
@@ -492,7 +427,7 @@ object SparkEntry {
       graft.core.Snapshot.merge(updates.unionByName(inserts), path,
         "l_orderkey", nFiles = 4)
       path
-    })
+    }
 
   // SQL-catalog front door: register the graft TableCatalog once per
   // (session, dir) and build the tables each SQL gate mutates — catalog
@@ -510,10 +445,8 @@ object SparkEntry {
   // CREATE TABLE + INSERT INTO through pure SQL: the whole write path —
   // DDL registration, DSv2 append with Spark-planned clustering and
   // inline writer stats — driven by two SQL statements.
-  private val sqlTablesIns =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def sqlTableInsert(s: SparkSession, d: String): String =
-    sqlTablesIns.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "sql_ins") { _ =>
       val cat = sqlCatalogFor(s, d)
       t(s, d, "lineitem").createOrReplaceTempView("graft_sql_lineitem")
       s.sql(s"CREATE TABLE $cat.ins (l_orderkey BIGINT, " +
@@ -522,30 +455,26 @@ object SparkEntry {
       s.sql(s"INSERT INTO $cat.ins SELECT l_orderkey, l_linenumber, " +
         "l_partkey, CAST(l_quantity AS BIGINT) FROM graft_sql_lineitem")
       cat
-    })
+    }
 
   // CTAS through pure SQL: schema from the query, registration from
   // table properties, data through the DSv2 write — one statement.
-  private val sqlTablesCtas =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def sqlTableCtas(s: SparkSession, d: String): String =
-    sqlTablesCtas.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "sql_ctas") { _ =>
       val cat = sqlCatalogFor(s, d)
       t(s, d, "lineitem").createOrReplaceTempView("graft_sql_lineitem")
       s.sql(s"CREATE TABLE $cat.ctas TBLPROPERTIES ('statcol' = " +
         "'l_orderkey') AS SELECT l_orderkey, l_linenumber, l_partkey, " +
         "CAST(l_quantity AS BIGINT) AS qty FROM graft_sql_lineitem")
       cat
-    })
+    }
 
   // MERGE INTO through pure SQL: the same key-replace upsert as the
   // library merge gate (shifted-quantity updates + shifted-key inserts),
   // resolved by Spark's group-based row-level-operation plan onto the
   // connector's copy-on-write rewrite.
-  private val sqlTablesMerge =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def sqlTableMerge(s: SparkSession, d: String): String =
-    sqlTablesMerge.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "sql_merge") { _ =>
       val cat = sqlCatalogFor(s, d)
       val li = t(s, d, "lineitem")
       graft.core.Snapshot.write(li, sqlTablePath(s, d, "m"),
@@ -560,78 +489,69 @@ object SparkEntry {
         "AND t.l_partkey = s.l_partkey AND t.l_suppkey = s.l_suppkey " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
       cat
-    })
+    }
 
   // DELETE FROM through pure SQL with a cluster-key range: Spark's
   // metadata-delete rule hands the predicate to the connector, which
   // folds it to one band and runs the O(overlap) copy-on-write delete.
-  private val sqlTablesDel =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def sqlTableDelete(s: SparkSession, d: String): String =
-    sqlTablesDel.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "sql_del") { _ =>
       val cat = sqlCatalogFor(s, d)
       graft.core.Snapshot.write(t(s, d, "lineitem"),
         sqlTablePath(s, d, "del"), "l_orderkey", nFiles = 16)
       s.sql(s"DELETE FROM $cat.del WHERE l_orderkey BETWEEN 300 AND 349")
       cat
-    })
+    }
 
   // UPDATE through pure SQL (non-key predicate contribution included):
   // the group-based rewrite — matched rows transformed, everything else
   // copied — landing through the connector's inline-stats writers.
-  private val sqlTablesUpd =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def sqlTableUpdate(s: SparkSession, d: String): String =
-    sqlTablesUpd.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "sql_upd") { _ =>
       val cat = sqlCatalogFor(s, d)
       graft.core.Snapshot.write(t(s, d, "lineitem"),
         sqlTablePath(s, d, "upd"), "l_orderkey", nFiles = 16)
       s.sql(s"UPDATE $cat.upd SET l_quantity = l_quantity + 1000 " +
         "WHERE l_orderkey BETWEEN 300 AND 349")
       cat
-    })
+    }
 
   // Versioned snapshot for the RESTORE gate: full lineitem (v1), a
   // copy-on-write delete (v2), then RESTORE to v1 (v3) — a pure
   // metadata rollback that must read as if the delete never happened.
-  private val snapshotsRestore =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def lineitemSnapshotRestore(s: SparkSession, d: String): String =
-    snapshotsRestore.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_restore", d)
+    artifact(s, d, "snapshot_restore") { path =>
       graft.core.Snapshot.write(t(s, d, "lineitem"), path,
         "l_orderkey", nFiles = 16)
       graft.core.Snapshot.delete(s, path, "l_orderkey", 300L, 349L)
       graft.core.Snapshot.restore(s, path, 1)
       path
-    })
+    }
 
   // Snapshot with a PER-FILE BLOOM sidecar for the point-lookup gate:
   // documents clustered on n_chars (so the zone map is USELESS for a
   // uid probe — only the bloom can prune) with the bloom registered on
   // the synthesized high-cardinality uid string.
-  private val snapshotsBloom =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def docsSnapshotBloom(s: SparkSession, d: String): String =
-    snapshotsBloom.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "snapshot_bloom", d)
+    artifact(s, d, "snapshot_bloom") { path =>
       graft.core.Snapshot.write(
         t(s, d, "documents").select(col("doc_id"), col("lang"),
           col("n_chars"),
           concat(lit("u"), col("doc_id").cast("string")).as("uid")),
         path, "n_chars", nFiles = 16, bloomCol = Some("uid"))
       path
-    })
+    }
 
-  private val sigStores =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  // The incremental-dedup signature store is an offline artifact too:
+  // built once per (session, dir) from the even-id half of the corpus, then
+  // probed (read-only) by the gate query — matching how a pipeline builds
+  // the store from history and probes each new crawl against it.
   private def sigStore(s: SparkSession, d: String): String =
-    sigStores.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
-      val path = scratchDir(s, "sigstore", d)
+    artifact(s, d, "sigstore") { path =>
       SignatureStore.build(s, path,
         t(s, d, "documents").where(col("doc_id") % 2 === 0))
       path
-    })
+    }
 
   // The k-NN graph is an offline artifact like the IVF index: built once
   // per (session, dir) — the expensive blocked pair join — and consumed by
@@ -640,14 +560,12 @@ object SparkEntry {
   // edge relation instead of re-running the k-means + pair join.
   // (maxBlock raised above corpus size: exact within-cluster semantics at
   // test scale; the library default LSH-sub-buckets hot clusters at 100 TB.)
-  private val knnCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
   private def knnEdges(s: SparkSession, d: String): DataFrame =
-    knnCache.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "knn") { _ =>
       val asg = ivfIdx(s, d).assignments.withColumnRenamed("id", "vec_id")
       Similarity.knnGraph(t(s, d, "embeddings").join(asg, "vec_id"),
         k = 3, partCol = "cluster", maxBlock = 1000000).localCheckpoint()
-    })
+    }
 
   // The near-dup PAIR relation + its component resolution are one offline
   // artifact (PairsIndex): the expensive shingle-Jaccard kernel runs once
@@ -655,12 +573,9 @@ object SparkEntry {
   // consumer (the pair gate itself, split-leakage, the source matrix,
   // components / droplist / keep-best / cluster stats) reads the layout
   // instead of re-running candidate generation + verification.
-  private val pairsIndexes =
-    scala.collection.concurrent.TrieMap.empty[(String, String), graft.llm.PairsIndex.Index]
   private def pairsIdx(s: SparkSession, d: String): graft.llm.PairsIndex.Index =
-    pairsIndexes.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d),
-      graft.llm.PairsIndex.build(t(s, d, "documents"),
-        path = scratchDir(s, "pairs", d), nBuckets = 16))
+    artifact(s, d, "pairs")(path => graft.llm.PairsIndex.build(
+      t(s, d, "documents"), path = path, nBuckets = 16))
   private def jaccPairs(s: SparkSession, d: String): DataFrame =
     pairsIdx(s, d).pairs(s)
   private def components(s: SparkSession, d: String): DataFrame =
@@ -672,16 +587,14 @@ object SparkEntry {
   // shingle sets, the corpus text never rescanned. The gate pins the
   // layered pair relation against the same full-corpus oracle as the
   // one-shot build, proving increment ≡ rebuild.
-  private val pairsIncIndexes =
-    scala.collection.concurrent.TrieMap.empty[(String, String), graft.llm.PairsIndex.Index]
   private def pairsIncIdx(s: SparkSession, d: String): graft.llm.PairsIndex.Index =
-    pairsIncIndexes.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+    artifact(s, d, "pairs_inc") { path =>
       val idx = graft.llm.PairsIndex.build(
         t(s, d, "documents").where(col("doc_id") % 3 =!= 0),
-        path = scratchDir(s, "pairs_inc", d), nBuckets = 16)
+        path = path, nBuckets = 16)
       graft.llm.PairsIndex.append(idx,
         t(s, d, "documents").where(col("doc_id") % 3 === 0), batchId = 1L)
-    })
+    }
 
   // The n-gram LM is an offline model artifact (NgramLm.save/load is the
   // disk form): train once per (session, dir, order), score many —
@@ -695,25 +608,18 @@ object SparkEntry {
   // query for a byte-identical relation. (Declared in OPTIMIZATION_r15.md:
   // this extends the session memo boundary from "trained model" to
   // "score-ready model".)
-  private val lmCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), graft.llm.NgramLm.PreparedModel]
   private def lmModel(s: SparkSession, d: String,
                       n: Int): graft.llm.NgramLm.PreparedModel =
-    lmCache.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d, n),
-      graft.llm.NgramLm.prepare(
-        graft.llm.NgramLm.train(t(s, d, "documents"), n = n)))
+    artifact(s, d, s"lm$n")(_ => graft.llm.NgramLm.prepare(
+      graft.llm.NgramLm.train(t(s, d, "documents"), n = n)))
 
   // TARGET-domain LM for the DSIR selection statistic: trained on the
   // English slice only (the "domain" a target-flavoured mix up-weights),
   // memoized beside the raw-corpus model it is compared against.
-  private val lmTargetCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), graft.llm.NgramLm.PreparedModel]
   private def lmTargetModel(s: SparkSession,
                             d: String): graft.llm.NgramLm.PreparedModel =
-    lmTargetCache.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d),
-      graft.llm.NgramLm.prepare(graft.llm.NgramLm.train(
+    artifact(s, d, "lm_target")(_ => graft.llm.NgramLm.prepare(
+      graft.llm.NgramLm.train(
         t(s, d, "documents").where(col("lang") === "en"), n = 2)))
 
   private def withK(ev: DataFrame): DataFrame =
@@ -724,10 +630,8 @@ object SparkEntry {
   // on the bucket key runs with ZERO Exchange. The in-memory catalog
   // forgets tables across JVMs while their warehouse dirs persist, so the
   // sink drops both before writing.
-  private val bucketed =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
-  private def ensureBucketed(s: SparkSession, d: String): Unit = {
-    bucketed.getOrElseUpdate((org.apache.spark.sql.graftbridge.SessionBridge.uuid(s), d), {
+  private def ensureBucketed(s: SparkSession, d: String): Unit =
+    artifact(s, d, "bucketed") { _ =>
       for (tbl <- Seq("graft_b_orders", "graft_b_customer")) {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         val loc = new java.io.File(
@@ -743,10 +647,7 @@ object SparkEntry {
       graft.etl.Etl.sinkBucketed(
         t(s, d, "customer").select("c_custkey", "c_nationkey"),
         "graft_b_customer", "c_custkey", 16)
-      true
-    })
-    ()
-  }
+    }
 
   private val lineitemBounds = Map(
     "l_discount" -> FieldBounds(Some(0.0), Some(0.05)),

@@ -20,16 +20,6 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Resolved-plan memo, keyed like the catalog entry it stands in for:
-  // (session UUID, dir, table). `spark.read.parquet` re-lists the directory
-  // and re-reads a footer for schema EVERY call — pure metadata overhead
-  // repeated at each of the ~150 loader call sites in a full query-suite
-  // run. The resolved LogicalRelation is immutable, so one resolution per
-  // session serves every query. Entries are plans (KBs); growth is bounded
-  // by live sessions × tables.
-  private val resolved =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String, Boolean), DataFrame]
-
   /** Tables whose single test-scale parquet file is below this size keep
     * their scan partitioning even under the warm cache — fanning a
     * kilobyte dim table out to every core costs more scheduling than it
@@ -44,35 +34,38 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val caching =
       spark.conf.getOption("spark.graft.cacheTables").contains("true")
-    val df = resolved.getOrElseUpdate(
-      (org.apache.spark.sql.graftbridge.SessionBridge.uuid(spark), dir, name,
-        caching), {
-        val raw0 = spark.read.parquet(s"$dir/$name.parquet")
-        val raw = if (name == "events") raw0.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) read as nano long
-            raw0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case org.apache.spark.sql.types.TimestampNTZType => // TIMESTAMP(MICROS) unadjusted
-            raw0.withColumn("ts",
-              col("ts").cast(org.apache.spark.sql.types.TimestampType))
-          case _ => raw0 // already a plain TimestampType
-        }
-        else raw0
-        // Test-scale data arrives as ONE small parquet file with one row
-        // group — unsplittable, so every scan is one partition and any
-        // compute-heavy downstream map stage (gram explodes, shingle
-        // hashing, position scoring) runs on one core while the rest
-        // idle. Under the opt-in warm cache, repartition such tables to
-        // core count BEFORE caching: the one-off shuffle is table-sized
-        // (small by the cache's own precondition) and every subsequent
-        // query reads a core-count-partitioned in-memory relation. The
-        // at-scale path (cache off — 100 TB tables are thousands of
-        // row-group-splittable files) never repartitions.
-        val cores = spark.sparkContext.defaultParallelism
-        val bytes = new java.io.File(s"$dir/$name.parquet").length()
-        if (caching && bytes >= RepartitionMinBytes &&
-            raw.rdd.getNumPartitions < cores) raw.repartition(cores)
-        else raw
-      })
+    // Resolved-plan memo: `spark.read.parquet` re-lists the directory and
+    // re-reads a footer for schema EVERY call — pure metadata overhead
+    // repeated at each of the ~150 loader call sites in a full query-suite
+    // run. The resolved LogicalRelation is immutable, so one resolution per
+    // session serves every query.
+    val df = SessionMemo(spark, dir, s"table/$name/$caching") {
+      val raw0 = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = if (name == "events") raw0.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) read as nano long
+          raw0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        case org.apache.spark.sql.types.TimestampNTZType => // TIMESTAMP(MICROS) unadjusted
+          raw0.withColumn("ts",
+            col("ts").cast(org.apache.spark.sql.types.TimestampType))
+        case _ => raw0 // already a plain TimestampType
+      }
+      else raw0
+      // Test-scale data arrives as ONE small parquet file with one row
+      // group — unsplittable, so every scan is one partition and any
+      // compute-heavy downstream map stage (gram explodes, shingle
+      // hashing, position scoring) runs on one core while the rest
+      // idle. Under the opt-in warm cache, repartition such tables to
+      // core count BEFORE caching: the one-off shuffle is table-sized
+      // (small by the cache's own precondition) and every subsequent
+      // query reads a core-count-partitioned in-memory relation. The
+      // at-scale path (cache off — 100 TB tables are thousands of
+      // row-group-splittable files) never repartitions.
+      val cores = spark.sparkContext.defaultParallelism
+      val bytes = new java.io.File(s"$dir/$name.parquet").length()
+      if (caching && bytes >= RepartitionMinBytes &&
+          raw.rdd.getNumPartitions < cores) raw.repartition(cores)
+      else raw
+    }
     // Opt-in warehouse cache (spark.graft.cacheTables=true): repeated loads
     // of the same table resolve to one in-memory copy via the CacheManager's
     // plan-equality lookup. For repeated-query workloads over tables that fit

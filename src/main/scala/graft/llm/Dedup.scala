@@ -876,6 +876,12 @@ object Dedup {
     * exactly one route (a pair shares all block columns, and each block
     * routes whole), so the union is the same multiset as the one-route
     * plans.
+    *
+    * EAGER PROBE: calling this method (for `maxDist ≤ 2`) runs one Spark
+    * job, the map-only upper bound on the largest block. When that bound
+    * exceeds [[FuzzyDeletionBlockThreshold]], a second job computes the
+    * exact largest block. Both jobs run at call time, even if the returned
+    * DataFrame is never executed.
     */
   def fuzzyPairs(records: DataFrame, keyCol: String, strCol: String,
                  blockCols: Seq[String], maxDist: Int = 2): DataFrame = {
@@ -963,8 +969,9 @@ object Dedup {
     * (quadratic in BLOCK size — the irreducible cost of the equi-join
     * shape), explode each record into its ≤ maxDist deletion neighborhood
     * (the SymSpell construction,
-    * [[graft.functions.DeletionNeighborhood]]) and group on
-    * `(block, variant)`: records of a group are candidate pairs.
+    * [[graft.functions.DeletionNeighborhood]]) and equi-join the variant
+    * rows with themselves on `(block, variant)`: records sharing a variant
+    * are candidate pairs.
     *
     * SOUND for edit distance: take any optimal alignment of
     * lev(a,b) = k ≤ maxDist edits and delete, on each side, the character
@@ -977,17 +984,18 @@ object Dedup {
     * before, so the output relation is IDENTICAL — the quadratic block
     * product just never materializes.
     *
-    * Shapes and bounds: ONE exchange carries the variant rows (record
+    * Shapes and bounds: the exchanges carry the variant rows (record
     * count × neighborhood size — linear in the data, vs the join shape's
     * quadratic pair relation); a candidate pair can share many variants,
     * so pairs are deduplicated on per-row ids before scoring (ids, not
     * keys: duplicate keys keep their multiset semantics — exactly the
     * row-pairs the strict `key_a < key_b` product emitted, each once).
-    * The ids are evaluated in ONE execution of one subtree (a single
-    * groupBy consumer), so monotonically_increasing_id needs no freezing
-    * checkpoint here. Per-group state is bounded by the block size in the
-    * degenerate all-equal-keys case — the same "block sizing is the
-    * caller's contract" bound the equi-join shape already imposes.
+    * A pair's `_ra` comes from the left side of the self-join and its `_rb`
+    * from the right, so the ids need only be unique within each side's
+    * execution: the two sides need not number rows alike, and
+    * monotonically_increasing_id needs no freezing checkpoint. A hot
+    * `(block, variant)` group goes through the join's buffered side, which
+    * spills, instead of one aggregation buffer holding the whole group.
     * Neighborhood size is quadratic in string LENGTH, which is why this
     * path is gated to short-string linkage (maxDist ≤ 2 entity keys),
     * never document text.
@@ -997,17 +1005,12 @@ object Dedup {
     val dels = base.withColumn("_rid", monotonically_increasing_id())
       .withColumn("_v", explode(
         graft.functions.native.deletionNeighborhood(col("_s"), maxDist)))
-    val grouped = dels
-      .groupBy(blockCols.map(col) :+ col("_v"): _*)
-      .agg(collect_list(struct(col("_rid"), col("_k"), col("_s"))).as("_g"))
-      .where(size(col("_g")) >= 2)
-    grouped
-      .select(explode(col("_g")).as("_a"), col("_g"))
-      .select(col("_a"), explode(col("_g")).as("_b"))
-      .where(col("_a._k") < col("_b._k"))
-      .select(col("_a._rid").as("_ra"), col("_b._rid").as("_rb"),
-        col("_a._k").as("key_a"), col("_a._s").as("_sa"),
-        col("_b._k").as("key_b"), col("_b._s").as("_sb"))
+    val cond = (blockCols :+ "_v").map(c => col(s"a.$c") === col(s"b.$c"))
+      .reduce(_ && _) && col("a._k") < col("b._k")
+    dels.as("a").join(dels.as("b"), cond)
+      .select(col("a._rid").as("_ra"), col("b._rid").as("_rb"),
+        col("a._k").as("key_a"), col("a._s").as("_sa"),
+        col("b._k").as("key_b"), col("b._s").as("_sb"))
       .distinct()
       .withColumn("dist",
         levenshtein(col("_sa"), col("_sb"), maxDist).cast("long"))

@@ -3982,6 +3982,10 @@ class LlmSpec extends SparkSpec {
     assert(got.queryExecution.analyzed.toString
       .toLowerCase.contains("deletionneighborhood"),
       "expected the hot block to engage the deletion-neighborhood kernel")
+    // the deletion route pairs variant rows through a self equi-join: no
+    // aggregation buffer holds a whole (block, variant) group
+    val optimized = got.queryExecution.optimizedPlan.toString
+    assert(!optimized.toLowerCase.contains("collect_list"), optimized)
     // reference: the strict key_a < key_b row-pair product + levenshtein
     def lev(a: String, b: String): Int = {
       val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
